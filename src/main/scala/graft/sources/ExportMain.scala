@@ -3,7 +3,9 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import graft.{GraftSession, SparkEntry, Tables}
 import graft.functions.EthiopianCalendar
 
@@ -82,32 +84,36 @@ object ExportMain {
     val (start, end) = EthiopianCalendar.reportWindow(m, y)
     println(s"[export] window ${Months(m - 1)} $y -> [$start, $end]")
 
+    // resolve every configured name BEFORE any Spark job: an unknown
+    // query fails the run here, not later inside the report pool. A
+    // query named by several tags is built once, under the first tag;
+    // the others get copies of its output
     val t = Tables(spark, sfDir)
-    // the 12 report queries all re-read the fact tables; one cached
-    // scan serves every report in the package (export.py runs its 12
-    // queries against the same warm MySQL — this is the Spark analog)
-    t.events.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
-
-    val queries: Map[String, org.apache.spark.sql.DataFrame] = config match {
+    val (reports, copies) = config match {
       case Some(c) =>
-        c.queries.map { case (tag, qname) =>
+        val tagsOf = c.queries.groupMap(_._2)(_._1).view.mapValues(_.sorted).toMap
+        val builds = c.queries.map(_._2).distinct.map { qname =>
+          val tags = tagsOf(qname)
           // window-dependent reports run at the runtime window; the
           // rest are the registered (fixed-window, oracle-matched)
           // queries unchanged
-          val df = graft.operators.LineLists.asOf.get(qname) match {
-            case Some(build) => build(spark, sfDir, end)
-            case None => SparkEntry.queries.getOrElse(qname,
-              throw new IllegalArgumentException(
-                s"config names unknown query '$qname' for tag '$tag'"))(spark, sfDir)
+          val build: () => DataFrame = graft.operators.LineLists.asOf.get(qname) match {
+            case Some(b) => () => b(spark, sfDir, end)
+            case None =>
+              val q = SparkEntry.queries.getOrElse(qname,
+                throw new IllegalArgumentException(
+                  s"config names unknown query '$qname' for tag '${tags.head}'"))
+              () => q(spark, sfDir)
           }
-          tag -> df
+          tags.head -> build
         }.toMap
+        (builds, tagsOf.values.flatMap(ts => ts.tail.map(_ -> ts.head)).toMap)
       case None =>
-        val windowed = t.events.filter(
-          col("ts") >= start.toString && col("ts") < end.plusDays(1).toString)
-        Map(
-          "Event_LineList" -> graft.operators.Relational.lineListAsOf(spark, sfDir, end),
-          "Event_Window" -> windowed)
+        (Map[String, () => DataFrame](
+          "Event_LineList" -> (() => graft.operators.Relational.lineListAsOf(spark, sfDir, end)),
+          "Event_Window" -> (() => t.events.filter(
+            col("ts") >= start.toString && col("ts") < end.plusDays(1).toString))),
+          Map.empty[String, String])
     }
 
     // constants from config, else from the dim tables, first row —
@@ -125,9 +131,21 @@ object ExportMain {
     val facility = constants.toMap.getOrElse("Facility", "Facility")
     val hmisCode = constants.toMap.getOrElse("HMISCode", "H000")
     val facilitySan = facility.replace(" ", "").replace("_", "")
-
     val tag = s"$facilitySan${hmisCode}_${Months(m - 1)}_$y"
-    ExportJob.run(spark, queries, constants,
-      outDir = Paths.get(outDir), tag = tag)
+
+    // the 12 report queries all re-read the fact tables; one cached
+    // scan serves every report in the package (export.py runs its 12
+    // queries against the same warm MySQL — this is the Spark analog).
+    // Materialized before the reports start: concurrent readers of a
+    // lazily-persisted frame each find it unbuilt and recompute it.
+    // Released when the run ends, unless it was cached before the run.
+    val events = t.events
+    val ownCache = events.storageLevel == StorageLevel.NONE
+    if (ownCache) events.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      events.count()
+      ExportJob.run(spark, reports, constants,
+        outDir = Paths.get(outDir), tag = tag, copies = copies)
+    } finally if (ownCache) events.unpersist(blocking = false)
   }
 }

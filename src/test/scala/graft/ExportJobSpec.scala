@@ -5,9 +5,74 @@ import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
 import scala.io.Source
 
-import graft.sources.ExportJob
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.storage.StorageLevel
+import graft.sources.{ExportJob, ExportMain}
 
 class ExportJobSpec extends SparkSpec {
+
+  private def description(e: SparkListenerJobStart): String =
+    Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+
+  /** Runs `body` and returns its outcome with every job started
+    * meanwhile. A marker job after `body` flushes the listener bus:
+    * events arrive in order, so once the marker's start is seen, so is
+    * every job before it.
+    */
+  private def jobsDuring[T](body: => T): (scala.util.Try[T], Seq[SparkListenerJobStart]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
+    }
+    val sc = spark.sparkContext
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    sc.addSparkListener(listener)
+    try {
+      val out = scala.util.Try(body)
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60000000000L
+      while (!seen.asScala.exists(description(_) == marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      (out, seen.asScala.toSeq.filterNot(description(_) == marker))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** name → bytes of every entry in a package's inner zip. */
+  private def innerEntries(pkg: java.nio.file.Path): Map[String, Array[Byte]] = {
+    val zf = new ZipFile(pkg.toFile)
+    try {
+      val e = zf.entries().asScala.find(_.getName.endsWith(".zip")).get
+      val in = new java.util.zip.ZipInputStream(zf.getInputStream(e))
+      Iterator.continually(in.getNextEntry).takeWhile(_ != null)
+        .map(x => x.getName -> in.readAllBytes()).toMap
+    } finally zf.close()
+  }
+
+  private def listing(dir: java.nio.file.Path): Seq[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally s.close()
+  }
+
+  private def writeConfig(queries: String): java.nio.file.Path = {
+    val p = Files.createTempFile("exportcfg", ".json")
+    Files.writeString(p, s"""{"queries":{$queries},
+      "constants":{"Region":"R1","Woreda":"W1","Facility":"F1","HMISCode":"H1"},
+      "window":{"eth_month":5,"eth_year":2016}}""")
+    p
+  }
+
+  /** A report whose CSV write runs about 25 s unless it is cancelled.
+    * Two tasks, so they leave two of the session's four cores to the
+    * report that fails.
+    */
+  private def slowReport(): DataFrame = {
+    val slow = udf((i: Long) => { Thread.sleep(1); i })
+    spark.range(0, 50000, 1, 2).toDF("id").withColumn("v", slow(col("id")))
+  }
 
   test("csv merge preserves quoted multiline fields byte-exactly") {
     import spark.implicits._
@@ -17,7 +82,7 @@ class ExportJobSpec extends SparkSpec {
       (2L, "embedded\nnewline"),
       (3L, "crlf\r\nline"),
       (4L, "quote\"inside")).toDF("id", "v").repartition(3)
-    val res = ExportJob.run(spark, Map("ml" -> df), Nil, out, "mltest")
+    val res = ExportJob.run(spark, Map("ml" -> (() => df)), Nil, out, "mltest")
     val zf = new ZipFile(res.packagePath.toFile)
     val tmpInner = Files.createTempFile("inner", ".zip")
     Files.copy(zf.getInputStream(zf.getEntry("mltest.zip")), tmpInner,
@@ -42,8 +107,8 @@ class ExportJobSpec extends SparkSpec {
     val res = ExportJob.run(
       spark,
       Map(
-        "regions" -> t.region,
-        "top_nations" -> t.nation.limit(5)),
+        "regions" -> (() => t.region),
+        "top_nations" -> (() => t.nation.limit(5))),
       constants = Seq("Region" -> "Addis", "Facility" -> "TestFacility", "HMISCode" -> "H123"),
       outDir = out,
       tag = "TestFacilityH123_Tir_2016")
@@ -82,7 +147,7 @@ class ExportJobSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_export_manifest")
     val df = (1 to 500).map(i => (i.toLong, s"name$i")).toDF("id", "name")
       .repartition(4)
-    val res = ExportJob.run(spark, Map("big" -> df),
+    val res = ExportJob.run(spark, Map("big" -> (() => df)),
       constants = Seq("Facility" -> "F1"), outDir = out, tag = "t1",
       mergeBudgetBytes = 1L)
     assert(res.dataDirs == Seq("big_t1"))
@@ -115,6 +180,28 @@ class ExportJobSpec extends SparkSpec {
     assert(listed.values.map(_._2).toSeq.distinct.length == listed.size,
       "distinct parts must carry distinct digests")
     inner.close(); zf.close()
+  }
+
+  test("manifest path: a copied report gets its own data dir and manifest of the same parts") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_export_manifest_copy")
+    val df = (1 to 200).map(i => (i.toLong, s"name$i")).toDF("id", "name").repartition(3)
+    val res = ExportJob.run(spark, Map("big" -> (() => df)), Nil, out, "t2",
+      mergeBudgetBytes = 1L, copies = Map("big2" -> "big"))
+    assert(res.dataDirs == Seq("big_t2", "big2_t2"))
+    assert(res.csvFiles == Seq("big_t2_manifest.csv", "big2_t2_manifest.csv"))
+    val manifests = innerEntries(res.packagePath).view
+      .mapValues(b => new String(b, "UTF-8").split("\n").toSeq).toMap
+    Seq("big", "big2").foreach { n =>
+      val listed = manifests(s"${n}_t2_manifest.csv").tail.map(_.split(","))
+      val dir = out.resolve(s"${n}_t2")
+      assert(listed.map(_(0)) == listing(dir).map(f => s"${n}_t2/$f"), n)
+      listed.foreach { case Array(f, b, h) =>
+        val p = out.resolve(f)
+        assert(Files.size(p) == b.toLong && ExportJob.sha256(p) == h, f)
+      }
+      assert(spark.read.option("header", "true").csv(dir.toString).count() == 200, n)
+    }
   }
 
   test("export config parses tags, constants and window (export_config.json semantics)") {
@@ -237,7 +324,7 @@ class ExportJobSpec extends SparkSpec {
     // and the packaged export flows through the jdbc source end-to-end
     val out = Files.createTempDirectory("graft_jdbc_export")
     val res = ExportJob.run(spark,
-      Map("Tx_Curr_LineList" -> viaJdbc),
+      Map("Tx_Curr_LineList" -> (() => viaJdbc)),
       Seq("Region" -> "R1"), out, "jdbcround")
     assert(Files.exists(res.packagePath))
     assert(res.csvFiles == Seq("Tx_Curr_LineList_jdbcround.csv"))
@@ -271,8 +358,7 @@ class ExportJobSpec extends SparkSpec {
           "window":{"eth_month":5,"eth_year":2016}}""")
     val resP = graft.sources.ExportMain.run(spark,
       Array(sf, outP.toString, cfgPath.toString))
-    // the packaged zips differ in entry timestamps; the report
-    // CONTENT must be identical — compare the inner CSV bytes
+    // the report CONTENT must be identical — compare the inner CSV lines
     def innerCsv(pkg: java.nio.file.Path): Seq[String] = {
       val zf = new ZipFile(pkg.toFile)
       val zipEntry = zf.entries().asScala.find(_.getName.endsWith(".zip")).get
@@ -321,5 +407,125 @@ class ExportJobSpec extends SparkSpec {
         s"partitioned jdbc rows ${a.length} vs parquet rows ${b.length}")
     } finally knobs.foreach { case (k, _) =>
       spark.conf.unset(s"graft.jdbc.$k") }
+  }
+
+  test("re-exporting one config gives the same package bytes") {
+    val runs = Seq("graft_same_a", "graft_same_b").map { d =>
+      ExportMain.run(spark, Array(sf, Files.createTempDirectory(d).toString,
+        "config/export_config.json"))
+    }
+    assert(runs(0).checksum == runs(1).checksum)
+    assert(java.util.Arrays.equals(Files.readAllBytes(runs(0).packagePath),
+      Files.readAllBytes(runs(1).packagePath)), "package bytes differ")
+    // the config's two repeated queries: each tag carries the same CSV
+    val csvs = innerEntries(runs(0).packagePath)
+    val tag = "TestFacilityH12323_Tir_2016"
+    Seq("Tx_Curr_HVL_LineList" -> "Tx_Curr_VLEligibleNew_LineList",
+        "Tx_Curr_AHD_LineList" -> "Tx_Curr_CCANew_LineList").foreach { case (a, b) =>
+      assert(csvs(s"${a}_$tag.csv").sameElements(csvs(s"${b}_$tag.csv")), s"$a vs $b")
+    }
+  }
+
+  test("a query named by two tags is built and written once, under both tags") {
+    def export(queries: String) = jobsDuring(ExportMain.run(spark, Array(sf,
+      Files.createTempDirectory("graft_dup").toString, writeConfig(queries).toString)))
+    export(""""A":"q_ll_hvl"""") // warm-up: table schemas, codegen
+    val (one, jobsOne) = export(""""A":"q_ll_hvl"""")
+    val (two, jobsTwo) = export(""""B":"q_ll_hvl","A":"q_ll_hvl"""")
+    assert(two.get.csvFiles == Seq("A_F1H1_Tir_2016.csv", "B_F1H1_Tir_2016.csv"))
+    val csvs = innerEntries(two.get.packagePath)
+    assert(csvs("A_F1H1_Tir_2016.csv").sameElements(csvs("B_F1H1_Tir_2016.csv")))
+    assert(csvs("A_F1H1_Tir_2016.csv").sameElements(
+      innerEntries(one.get.packagePath)("A_F1H1_Tir_2016.csv")))
+    // the second tag adds no job: none runs under its name
+    assert(jobsTwo.size <= jobsOne.size,
+      s"two tags ran ${jobsTwo.size} jobs, one tag ${jobsOne.size}")
+    assert(!jobsTwo.exists(description(_) == "export/B"))
+  }
+
+  test("every report's CSV write is a Spark job described export/<name>") {
+    val t = Tables(spark, sf)
+    val out = Files.createTempDirectory("graft_jobnames")
+    val (res, jobs) = jobsDuring(ExportJob.run(spark, Map(
+        "regions" -> (() => t.region),
+        "nations" -> (() => t.nation),
+        "customers" -> (() => t.customer)),
+      Nil, out, "jobnames"))
+    assert(res.get.csvFiles == Seq("customers_jobnames.csv",
+      "nations_jobnames.csv", "regions_jobnames.csv"))
+    val writes = jobs.filter(_.stageInfos.exists(_.name.startsWith("csv at")))
+      .map(description).toSet
+    assert(Set("export/regions", "export/nations", "export/customers").subsetOf(writes),
+      s"csv write jobs were described $writes")
+  }
+
+  test("a report that throws in build fails the run by name, cancels the rest, leaves nothing") {
+    val out = Files.createTempDirectory("graft_fail_build")
+    spark.sparkContext // a session start is no part of the timed run
+    val t0 = System.nanoTime()
+    val e = intercept[RuntimeException] {
+      ExportJob.run(spark, Map(
+          "slow" -> (() => slowReport()),
+          "broken" -> (() => throw new IllegalStateException("no such table"))),
+        Nil, out, "failbuild")
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("'broken'") && e.getMessage.contains("no such table"),
+      e.getMessage)
+    assert(secs < 15, s"the slow sibling was not cancelled: the run took $secs s")
+    assert(listing(out).isEmpty, listing(out))
+  }
+
+  test("a report that throws in write fails the run by name, cancels the rest, leaves nothing") {
+    val out = Files.createTempDirectory("graft_fail_write")
+    spark.sparkContext // a session start is no part of the timed run
+    val bad = udf((i: Long) => { if (i == 3) throw new IllegalStateException("bad row"); i })
+    val t0 = System.nanoTime()
+    val e = intercept[RuntimeException] {
+      ExportJob.run(spark, Map(
+          "slow" -> (() => slowReport()),
+          "ok" -> (() => spark.range(0, 10).toDF("id")),
+          "broken" -> (() => spark.range(0, 10, 1, 2).toDF("id")
+            .withColumn("v", bad(col("id"))))),
+        Nil, out, "failwrite")
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("'broken'"), e.getMessage)
+    assert(secs < 15, s"the slow sibling was not cancelled: the run took $secs s")
+    assert(listing(out).isEmpty, listing(out))
+  }
+
+  test("an unknown query name is rejected before any Spark job runs") {
+    val cfg = Files.createTempFile("unknownq", ".json")
+    Files.writeString(cfg, """{"queries":{"A":"q_line_list","B":"q_no_such_query"},
+      "window":{"eth_month":5,"eth_year":2016}}""")
+    val out = Files.createTempDirectory("graft_unknownq")
+    val (res, jobs) = jobsDuring(ExportMain.run(spark, Array(sf, out.toString, cfg.toString)))
+    res.failed.get match {
+      case e: IllegalArgumentException =>
+        assert(e.getMessage.contains("q_no_such_query"), e.getMessage)
+      case e => fail(s"expected IllegalArgumentException, got $e")
+    }
+    assert(jobs.isEmpty, s"${jobs.size} jobs ran before the config was rejected")
+    assert(listing(out).isEmpty, listing(out))
+  }
+
+  test("a run releases the events cache it made, and only that one") {
+    val sc = spark.sparkContext
+    val events = Tables(spark, sf).events
+    events.unpersist(blocking = true)
+    val cfg = writeConfig(""""A":"q_line_list"""").toString
+    def export() = ExportMain.run(spark,
+      Array(sf, Files.createTempDirectory("graft_cache").toString, cfg))
+    val before = sc.getPersistentRDDs.keySet
+    export()
+    assert(events.storageLevel == StorageLevel.NONE)
+    assert(sc.getPersistentRDDs.keySet == before, "the run left a cached RDD behind")
+    // cached by the caller before the run: still cached after it
+    events.persist(StorageLevel.MEMORY_AND_DISK).count()
+    try {
+      export()
+      assert(events.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally events.unpersist(blocking = true)
   }
 }
